@@ -1,7 +1,7 @@
 """Curation-integrated output writer (round-5 verdict #5): one pass from a
 raw document table to the TRAINING table + the AUDIT table, through the
-TableIO conventions (bucketed dynamic-overwrite writes, per-bucket lineage,
-broadcast anti-join resume).
+io.py resumable bucketed-write contract (bucketed dynamic-overwrite writes,
+per-bucket lineage, broadcast anti-join resume).
 
 * ``training`` — the kept documents, with their duplicated segments
   STRIPPED (functions.dedup.strip_dup_segments over the kept set): doc_id,
@@ -35,8 +35,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .config import DEFAULT_N_BUCKETS
 from .functions.curate import curate_corpus
 from .functions.dedup import strip_dup_chunks, strip_dup_segments
-from .io import has_parquet, require_local, with_bucket
-from .streaming.dedup_stream import _geometry_guard
+from .io import (
+    done_buckets, drop_buckets, geometry_guard, has_parquet, prune_pending,
+    require_local, with_bucket, write_buckets, write_lineage,
+)
 
 # curate_kwargs that do not change the curation DECISIONS (or cannot be
 # fingerprinted): excluded from the persisted geometry so a resume under a
@@ -58,6 +60,64 @@ def curated_paths(out_root: str) -> tuple[str, str, str]:
         os.path.join(out_root, "training"),
         os.path.join(out_root, "audit"),
         os.path.join(out_root, "curated_lineage"),
+    )
+
+
+def curate_geometry(kind: str, n_buckets: int, curate_kwargs: dict,
+                    **params) -> dict:
+    """The persisted geometry of a curated product (write_curated,
+    prep_io.write_training_data): its own decision parameters plus every
+    decision-relevant curate_kwarg. JSON round-trip normalizes tuples
+    (languages=) to lists so the comparison is representation-stable."""
+    clf = curate_kwargs.get("clf_weights")
+    return json.loads(json.dumps({
+        "kind": kind,
+        "n_buckets": n_buckets,
+        **params,
+        "semantic": curate_kwargs.get("embeddings") is not None,
+        "media_tier": curate_kwargs.get("doc_media") is not None,
+        # model gate (round 8): pin the weight ARTIFACT's identity, not the
+        # list (a 2^20-bucket table would bloat the sidecar unreadable)
+        "clf": None if clf is None else {
+            "n_buckets": len(clf),
+            "fingerprint": hashlib.md5(
+                ",".join(str(int(w)) for w in clf).encode()
+            ).hexdigest(),
+        },
+        **{k: v for k, v in sorted(curate_kwargs.items())
+           if k not in _GEOMETRY_EXCLUDED},
+    }))
+
+
+def audit_lineage(spark: SparkSession, audit_path: str, texts_path: str,
+                  done: DataFrame | None, id_col: str, text_col: str,
+                  token_col: str) -> DataFrame:
+    """Per-bucket lineage of a curated product, from the files just written
+    (this run's buckets only). The audit side drives — every input doc has
+    an audit row, so every written bucket gets a lineage row even when it
+    kept zero docs; the texts side adds (token_count, checksum) and may
+    have written NO files at all (all docs dropped), so it is probed before
+    the read-back, which could not infer a schema."""
+    lin = drop_buckets(spark.read.parquet(audit_path), done).groupBy(
+        "bucket").agg(
+        F.min(id_col).alias("doc_range_min"),
+        F.max(id_col).alias("doc_range_max"),
+        F.count("*").alias("doc_count"),
+        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept_count"),
+    )
+    if not has_parquet(texts_path):
+        return lin.withColumn(
+            "token_count", F.lit(None).cast("bigint")
+        ).withColumn("checksum", F.lit(None).cast("bigint"))
+    texts = drop_buckets(spark.read.parquet(texts_path), done)
+    return lin.join(
+        texts.withColumn("h", F.xxhash64(F.col(id_col), F.col(text_col)))
+        .groupBy("bucket")
+        .agg(
+            F.sum(token_col).alias("token_count"),
+            F.expr("bit_xor(h)").alias("checksum"),
+        ),
+        "bucket", "left",
     )
 
 
@@ -86,44 +146,20 @@ def write_curated(spark: SparkSession, docs: DataFrame, out_root: str,
     # thresholds match the run that wrote those buckets — a silent mismatch
     # would anti-join new bucket ids against old ones and leave a training
     # table whose partitions were produced under inconsistent parameters.
-    # Persist the decision-relevant parameters next to the output and refuse
-    # loudly on any difference (the dedup-store _geometry_guard contract,
-    # under curate_io's own sidecar name). JSON round-trip normalizes tuples
-    # (languages=) to lists so the comparison is representation-stable.
-    geometry = json.loads(json.dumps({
-        "kind": "curated",
-        "n_buckets": n_buckets,
-        "segment_scheme": segment_scheme,
-        "seg_win": seg_win, "seg_stride": seg_stride,
-        "cdc_avg_chunk": cdc_avg_chunk, "cdc_min_tokens": cdc_min_tokens,
-        "cdc_window_k": cdc_window_k,
-        "semantic": curate_kwargs.get("embeddings") is not None,
-        "media_tier": curate_kwargs.get("doc_media") is not None,
-        # model gate (round 8): pin the weight ARTIFACT's identity, not the
-        # list (a 2^20-bucket table would bloat the sidecar unreadable)
-        "clf": None if curate_kwargs.get("clf_weights") is None else {
-            "n_buckets": len(curate_kwargs["clf_weights"]),
-            "fingerprint": hashlib.md5(",".join(
-                str(int(w)) for w in curate_kwargs["clf_weights"]
-            ).encode()).hexdigest(),
-        },
-        **{k: v for k, v in sorted(curate_kwargs.items())
-           if k not in _GEOMETRY_EXCLUDED},
-    }))
-    _geometry_guard(out_root, geometry, filename="_curated_geometry.json")
+    geometry_guard(out_root, curate_geometry(
+        "curated", n_buckets, curate_kwargs,
+        segment_scheme=segment_scheme,
+        seg_win=seg_win, seg_stride=seg_stride,
+        cdc_avg_chunk=cdc_avg_chunk, cdc_min_tokens=cdc_min_tokens,
+        cdc_window_k=cdc_window_k,
+    ), "_curated_geometry.json")
 
     def _bucket(df):
         # io.with_bucket — ONE copy of the bucket rule keeps curated buckets
         # aligned with docs_out buckets forever
         return with_bucket(df, n_buckets, id_col=id_col)
 
-    # resume probe: buckets with a lineage row are complete. has_parquet,
-    # not exists — a crash DURING the lineage write leaves the directory
-    # present but file-less, and resume must re-run, not wedge on schema
-    # inference
-    done = None
-    if has_parquet(lin_path):
-        done = spark.read.parquet(lin_path).select("bucket").distinct()
+    done = done_buckets(spark, lin_path)
     curated = curate_corpus(
         docs, id_col, text_col,
         segment_scheme=segment_scheme, seg_win=seg_win,
@@ -148,71 +184,16 @@ def write_curated(spark: SparkSession, docs: DataFrame, out_root: str,
     if "model_quality_micros" in curated.columns:  # model tier on: ditto
         audit_cols.insert(audit_cols.index("keep"), "model_quality_micros")
     audit = _bucket(curated.select(id_col, *audit_cols))
-    if done is not None:
-        # global decisions, pruned writes: only pending buckets are written
-        training = training.join(F.broadcast(done), "bucket", "left_anti")
-        audit = audit.join(F.broadcast(done), "bucket", "left_anti")
-    if fail_after_buckets is not None:
-        keep_b = [
-            r["bucket"]
-            for r in audit.select("bucket").distinct()
-            .orderBy("bucket").collect()
-        ][:fail_after_buckets]
-        training = training.filter(F.col("bucket").isin(keep_b))
-        audit = audit.filter(F.col("bucket").isin(keep_b))
+    # global decisions, pruned writes: only pending buckets are written
+    audit, training = prune_pending([audit, training], done,
+                                    fail_after_buckets)
     if audit.isEmpty():
         return {"docs_in": 0, "kept": 0, "buckets_written": 0, "skipped": True}
     for frame, path in ((training, train_path), (audit, audit_path)):
-        (
-            frame.repartition(n_buckets, "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
-    # lineage from the files just written (one cheap scan), this run's
-    # buckets only; <= n_buckets rows collected driver-side. The audit side
-    # drives (every input doc has an audit row, so every written bucket gets
-    # a lineage row even when it kept zero docs); the training side may have
-    # written NO files at all (all docs dropped) — the empty-output guard
-    # TableIO.write documents, re-applied here before the read-back.
-    audit_back = spark.read.parquet(audit_path)
-    if done is not None:
-        audit_back = audit_back.join(F.broadcast(done), "bucket", "left_anti")
-    lin = audit_back.groupBy("bucket").agg(
-        F.min(id_col).alias("doc_range_min"),
-        F.max(id_col).alias("doc_range_max"),
-        F.count("*").alias("doc_count"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept_count"),
-    )
-    if has_parquet(train_path):
-        back = spark.read.parquet(train_path)
-        if done is not None:
-            back = back.join(F.broadcast(done), "bucket", "left_anti")
-        lin = lin.join(
-            back.withColumn(
-                "h", F.xxhash64(F.col(id_col), F.col("text_clean"))
-            )
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_kept").alias("token_count"),
-                F.expr("bit_xor(h)").alias("checksum"),
-            ),
-            "bucket", "left",
-        )
-    else:
-        lin = lin.withColumn(
-            "token_count", F.lit(None).cast("bigint")
-        ).withColumn("checksum", F.lit(None).cast("bigint"))
-    rows = lin.collect()
-    if rows:
-        (
-            spark.createDataFrame(rows, lin.schema)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(lin_path)
-        )
+        write_buckets(frame, path, n_buckets)
+    rows = write_lineage(spark, audit_lineage(
+        spark, audit_path, train_path, done, id_col, "text_clean", "n_kept"
+    ), lin_path)
     return {
         "docs_in": sum(r["doc_count"] for r in rows),
         "kept": sum(r["kept_count"] for r in rows),

@@ -100,9 +100,10 @@ from pyspark.sql.streaming import StreamingQuery
 from ..config import DEFAULT_N_BUCKETS
 from ..functions.curate import annotate_gates, heuristic_reason
 from ..functions.dedup import _strip_spans, normalized
-from ..io import has_parquet, parallel_actions, require_local, with_bucket
+from ..io import (
+    geometry_guard, has_parquet, parallel_actions, require_local, with_bucket,
+)
 from .dedup_stream import (
-    _geometry_guard,
     make_dedup_batch,
     read_cluster_labels,
     read_flags,
@@ -293,7 +294,7 @@ def make_curate_batch(spark: SparkSession, out_root: str,
         bid = int(batch_id)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry, filename="_curate_geometry.json")
+        geometry_guard(out_root, geometry, "_curate_geometry.json")
         id_type = dict(batch_df.dtypes)[id_col]
         # 1. heuristic gates (+ the model margin when the tier is on): one
         # narrow map, materialized once (feeds the survivor filter AND the

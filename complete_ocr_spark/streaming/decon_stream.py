@@ -32,8 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.prep import benchmark_grams, decontaminate
-from ..io import require_local
-from .dedup_stream import _geometry_guard, _has_parquet
+from ..io import geometry_guard, has_parquet, require_local
 
 
 def decon_paths(out_root: str) -> str:
@@ -72,7 +71,7 @@ def make_decon_batch(spark: SparkSession, out_root: str,
         bid = int(batch_id)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry, filename="_decon_geometry.json")
+        geometry_guard(out_root, geometry, "_decon_geometry.json")
         flags = decontaminate(
             batch_df, bench, id_col, text_col, n=n, min_hits=min_hits,
         )
@@ -94,7 +93,7 @@ def read_decon_incr(spark: SparkSession, out_root: str,
     contamination, batch_id). Equals batch decontaminate over the union of
     all arrived batches under ANY arrival order (pure per-doc map)."""
     flag_path = decon_paths(out_root)
-    if not _has_parquet(flag_path):
+    if not has_parquet(flag_path):
         return spark.createDataFrame(
             [], f"doc_id {id_type}, n_grams bigint, n_hits bigint, "
                 f"contamination double, batch_id bigint")

@@ -59,8 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions import retrieval
-from ..io import require_local
-from .dedup_stream import _geometry_guard, _has_parquet
+from ..io import geometry_guard, has_parquet, require_local
 
 N_TB_BUCKETS = 16
 
@@ -112,7 +111,7 @@ def make_index_batch(spark: SparkSession, out_root: str,
             # partitions would double-count the batch (module docstring)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry, filename="_index_geometry.json")
+        geometry_guard(out_root, geometry, "_index_geometry.json")
         pairs = retrieval.doc_term_pairs(
             batch_df, id_col, text_col, n_buckets
         ).localCheckpoint()  # feeds the stats agg AND the store write
@@ -166,12 +165,12 @@ def rebase_in_place(spark: SparkSession, out_root: str, through: int) -> None:
         sparts.append(
             spark.read.parquet(os.path.join(base_old, "stats"))
             .select("n_docs", "total_tokens"))
-    if _has_parquet(post_path):
+    if has_parquet(post_path):
         parts.append(
             spark.read.parquet(post_path)
             .filter(F.col("batch_id") <= through)
             .select("doc_id", "dl", "term", "tf", "tb"))
-    if _has_parquet(stats_path):
+    if has_parquet(stats_path):
         sparts.append(
             spark.read.parquet(stats_path)
             .filter(F.col("batch_id") <= through)
@@ -228,7 +227,7 @@ def read_index_stats(spark: SparkSession, out_root: str) -> tuple[int, int]:
     if base is not None:
         row = spark.read.parquet(os.path.join(base, "stats")).head()
         n, tt = int(row["n_docs"]), int(row["total_tokens"])
-    if _has_parquet(stats_path):
+    if has_parquet(stats_path):
         row = (
             spark.read.parquet(stats_path)
             .filter(F.col("batch_id") > through)
@@ -265,7 +264,7 @@ def bm25_topk_incr(spark: SparkSession, out_root: str, terms: list[str],
         parts.append(
             spark.read.parquet(os.path.join(base, "postings")).filter(pred)
             .select("doc_id", "dl", "term", "tf"))
-    if _has_parquet(post_path):
+    if has_parquet(post_path):
         parts.append(
             spark.read.parquet(post_path)
             .filter(pred & (F.col("batch_id") > through))
@@ -298,7 +297,7 @@ def rebase(spark: SparkSession, out_root: str, dest_root: str) -> None:
                      .select("doc_id", "dl", "term", "tf", "tb"))
         sparts.append(spark.read.parquet(os.path.join(base, "stats"))
                       .select("n_docs", "total_tokens"))
-    if _has_parquet(post_path):
+    if has_parquet(post_path):
         parts.append(spark.read.parquet(post_path)
                      .filter(F.col("batch_id") > through)
                      .select("doc_id", "dl", "term", "tf", "tb"))

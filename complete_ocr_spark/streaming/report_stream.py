@@ -28,8 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.report import corpus_report
-from ..io import require_local
-from .dedup_stream import _geometry_guard, _has_parquet
+from ..io import geometry_guard, has_parquet, require_local
 
 
 def report_paths(out_root: str) -> str:
@@ -51,7 +50,7 @@ def make_report_batch(spark: SparkSession, out_root: str,
         bid = int(batch_id)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry, filename="_report_geometry.json")
+        geometry_guard(out_root, geometry, "_report_geometry.json")
         rep = corpus_report(batch_df, id_col, text_col, lang_col=lang_col)
         (
             rep.withColumn("batch_id", F.lit(bid))
@@ -71,7 +70,7 @@ def read_report_incr(spark: SparkSession, out_root: str) -> DataFrame:
     columns are additive), equal to batch corpus_report over the union of
     all arrived batches under ANY arrival order."""
     path = report_paths(out_root)
-    if not _has_parquet(path):
+    if not has_parquet(path):
         return spark.createDataFrame(
             [], "metric string, n_docs bigint, total bigint")
     return (

@@ -54,8 +54,9 @@ from ..functions.dedup import (
     cdc_chunk_fingerprints,
     segment_fingerprints,
 )
-from ..io import parallel_actions, require_local
-from .dedup_stream import _geometry_guard, _has_parquet
+from ..io import (
+    geometry_guard, has_parquet, parallel_actions, require_local,
+)
 
 N_FP_BUCKETS = 16
 
@@ -130,7 +131,7 @@ def make_segment_dedup_batch(spark: SparkSession, out_root: str,
         bid = int(batch_id)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry)
+        geometry_guard(out_root, geometry, "_dedup_geometry.json")
         # the fingerprint pass feeds three consumers (touched-bucket probe,
         # owner join, store write) — materialize the batch-sized result
         # once. Both schemes normalize to (doc_id, ws, we, fp): ws/we =
@@ -157,7 +158,7 @@ def make_segment_dedup_batch(spark: SparkSession, out_root: str,
         )
         # bounded driver read: at most n_fp_buckets values
         touched = [r["fb"] for r in fps.select("fb").distinct().collect()]
-        if _has_parquet(fp_path):
+        if has_parquet(fp_path):
             prior = (
                 spark.read.parquet(fp_path)
                 .filter((F.col("batch_id") < bid) & F.col("fb").isin(touched))
@@ -266,7 +267,7 @@ def read_segment_spans(spark: SparkSession, out_root: str,
     span_end, n_windows, batch_id). Empty (typed) frame before the first
     non-trivial batch."""
     span_path = segment_paths(require_local(out_root, "out_root"))[1]
-    if not _has_parquet(span_path):
+    if not has_parquet(span_path):
         return spark.createDataFrame(
             [],
             f"doc_id {id_type}, dup_of {id_type}, span_start int, "
@@ -281,7 +282,7 @@ def read_clean_docs(spark: SparkSession, out_root: str,
     n_kept, n_dropped, batch_id) for EVERY doc of every processed batch.
     Empty typed frame before the first batch."""
     path = clean_path(require_local(out_root, "out_root"))
-    if not _has_parquet(path):
+    if not has_parquet(path):
         return spark.createDataFrame(
             [],
             f"doc_id {id_type}, text_clean string, n_kept bigint, "

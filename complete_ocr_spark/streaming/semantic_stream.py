@@ -47,8 +47,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.similarity import SRP_SEED, cosine, srp_hyperplanes
-from ..io import require_local
-from .dedup_stream import _geometry_guard, _has_parquet
+from ..io import geometry_guard, has_parquet, require_local
 
 N_VALUE_BUCKETS = 16
 N_DOC_BUCKETS = 16
@@ -108,8 +107,8 @@ def make_semantic_dedup_batch(spark: SparkSession, out_root: str,
         bid = int(batch_id)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry,
-                        filename="_semantic_geometry.json")
+        geometry_guard(out_root, geometry,
+                        "_semantic_geometry.json")
         batch = (
             batch_df.select(F.col(id_col).alias("doc"),
                             F.col(vec_col).alias("v"))
@@ -124,7 +123,7 @@ def make_semantic_dedup_batch(spark: SparkSession, out_root: str,
         )
         touched = [r["vb"] for r in keys.select("vb").distinct().collect()]
         corpus_keys = keys
-        if _has_parquet(band_path):
+        if has_parquet(band_path):
             corpus_keys = corpus_keys.unionByName(
                 spark.read.parquet(band_path)
                 .filter((F.col("batch_id") < bid) & F.col("vb").isin(touched))
@@ -158,7 +157,7 @@ def make_semantic_dedup_batch(spark: SparkSession, out_root: str,
         touched_db = [r["db"] for r in cand_db.collect()]
         earlier_vecs = batch.select(F.col("doc").alias("dup_of"),
                                     F.col("v").alias("v2"))
-        if _has_parquet(vec_path) and touched_db:
+        if has_parquet(vec_path) and touched_db:
             earlier_vecs = earlier_vecs.unionByName(
                 spark.read.parquet(vec_path)
                 .filter((F.col("batch_id") < bid)
@@ -211,7 +210,7 @@ def read_semantic_pairs(spark: SparkSession, out_root: str,
     """All verified pairs so far: (doc, dup_of, dup_batch, cos, batch_id).
     Empty-frame fallback keeps bootstrap reads total."""
     pair_path = semantic_paths(out_root)[2]
-    if not _has_parquet(pair_path):
+    if not has_parquet(pair_path):
         return spark.createDataFrame(
             [], f"doc {id_type}, dup_of {id_type}, dup_batch bigint, "
                 f"cos double, batch_id bigint")
@@ -222,6 +221,6 @@ def read_semantic_flags(spark: SparkSession, out_root: str,
                         id_type: str = "bigint") -> DataFrame:
     """Docs with a strictly-earlier verified match: (doc, batch_id)."""
     flag_path = semantic_paths(out_root)[3]
-    if not _has_parquet(flag_path):
+    if not has_parquet(flag_path):
         return spark.createDataFrame([], f"doc {id_type}, batch_id bigint")
     return spark.read.parquet(flag_path)

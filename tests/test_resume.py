@@ -64,6 +64,52 @@ def test_rerun_of_completed_bucket_is_idempotent(spark, docs_df, tmp_path):
     assert _canon(io.read_docs_out()) == before
 
 
+def test_run_job_resumes_past_a_crash_during_the_lineage_write(
+        spark, docs_df, tmp_path):
+    """A crash while lineage/ is being written leaves the directory holding
+    only _temporary/. That is "no bucket done", not a table to read: the
+    rerun processes every doc instead of failing schema inference on every
+    attempt."""
+    root = tmp_path / "crashed_lineage"
+    (root / "lineage" / "_temporary" / "0").mkdir(parents=True)
+    r = run_job(spark, docs_df, str(root), n_buckets=4)
+    assert r == {"docs_processed": 120, "skipped": False}
+    io = TableIO(spark, str(root), 4)
+    assert io.read_lineage().agg(F.sum("doc_count")).collect()[0][0] == 120
+    assert run_job(spark, docs_df, str(root), n_buckets=4) == {
+        "docs_processed": 0, "skipped": True}
+
+
+def test_run_job_refuses_a_resume_under_other_n_buckets(
+        spark, docs_df, tmp_path):
+    """Lineage bucket ids only name the same docs under the n_buckets that
+    wrote them: resuming a crashed run with another n_buckets must refuse
+    before writing anything, not anti-join new bucket ids against old ones
+    and silently leave docs out of docs_out."""
+    import os
+
+    root = str(tmp_path / "geometry")
+    r1 = run_job(spark, docs_df, root, n_buckets=8, fail_after_buckets=3)
+    assert 0 < r1["docs_processed"] < 120
+
+    def snapshot():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, files in os.walk(root) for f in files
+        }
+
+    before = snapshot()
+    with pytest.raises(ValueError, match="geometry mismatch") as err:
+        run_job(spark, docs_df, root, n_buckets=4)
+    assert "_docs_out_geometry.json" in str(err.value)
+    assert "n_buckets stored 8, this run 4" in str(err.value)
+    assert snapshot() == before
+    # the original geometry still resumes to the full set
+    r2 = run_job(spark, docs_df, root, n_buckets=8)
+    assert r1["docs_processed"] + r2["docs_processed"] == 120
+    assert TableIO(spark, root, 8).read_docs_out().count() == 120
+
+
 def test_write_curated_resume_and_reconciliation(spark, tmp_path):
     """write_curated (round-5 verdict #5): a crashed run resumes by writing
     exactly the missing buckets; a completed run is a no-op; the audit
@@ -147,15 +193,21 @@ def test_write_curated_refuses_parameter_drift(spark, tmp_path):
     r = write_curated(spark, docs, root, n_buckets=4,
                       fail_after_buckets=1, min_quality=0.6)
     assert r["buckets_written"] == 1
-    for bad in (
-        dict(n_buckets=8),                          # bucket rule changed
-        dict(n_buckets=4, segment_scheme="cdc"),    # detector changed
-        dict(n_buckets=4, seg_win=10),              # segment geometry changed
-        dict(n_buckets=4, min_quality=0.9),         # threshold changed
+    for bad, key in (
+        (dict(n_buckets=8), "n_buckets"),                   # bucket rule
+        (dict(n_buckets=4, segment_scheme="cdc"), "segment_scheme"),
+        (dict(n_buckets=4, seg_win=10), "seg_win"),         # segment geometry
+        (dict(n_buckets=4, min_quality=0.9), "min_quality"),  # threshold
     ):
         bad.setdefault("min_quality", 0.6)
-        with pytest.raises(ValueError, match="geometry mismatch"):
+        with pytest.raises(ValueError, match="geometry mismatch") as err:
             write_curated(spark, docs, root, **bad)
+        # the error names the sidecar and exactly the keys that differ
+        msg = str(err.value)
+        assert "_curated_geometry.json" in msg
+        assert f"{key} stored" in msg
+        others = {"n_buckets", "segment_scheme", "seg_win", "min_quality"}
+        assert not any(f"{k} stored" in msg for k in others - {key})
     # decision-neutral: a different near-dup scratch path resumes fine
     r2 = write_curated(spark, docs, root, n_buckets=4, min_quality=0.6,
                        near_dup_sig_store=str(tmp_path / "sigs"))
